@@ -26,15 +26,15 @@ Design — the FAISS IVF ``add()`` contract:
 State layout: one row per live id — ``(ns, id, version, embedding,
 cell, codes)`` with the ``m`` PQ codes PACKED into one BIGINT
 (``m ≤ 8``, ``k_sub ≤ 256``: 8 bits per subspace), so no array or
-string ever enters an aggregation buffer (HashAggregate everywhere;
-the packed argmin inside :func:`pq_encode` already obeys the same
-rule).  Batch compaction is the all-hash join-back shape: max version
-per key (primitive buffer), then an equi-join retrieves the winning
-row's vector — the vector itself never rides a ``max_by`` buffer.
-Commit/versioning/tombstones are the document sink's own
-(:mod:`monstache_spark.sinks.merge`): directory-versioned commits with
-a CURRENT pointer, stale replays lose, a delete beats an equal-version
-upsert, tombstones persist so late stale inserts stay dead.
+string enters an aggregation buffer over index state (the packed
+argmin inside :func:`pq_encode` obeys the same rule).  Batch staging
+is the document sink's single keyed aggregation; there the winning
+vector rides a ``max_by`` buffer, a sort-based aggregate over the
+micro-batch's rows only.  Staging, commit, versioning and tombstones
+are the document sink's own (:mod:`monstache_spark.sinks.merge`):
+directory-versioned commits with a CURRENT pointer, stale replays
+lose, a delete beats an equal-version upsert, tombstones persist so
+late stale inserts stay dead.
 
 Scale notes (100 TB): centroids and codebooks are broadcast metadata;
 per-batch assign/encode touches micro-batch-sized rows only; the
@@ -50,8 +50,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from monstache_spark.envelope import OP_DELETE
-from monstache_spark.sinks.merge import StateTable, _merge_apply
+from monstache_spark.sinks.merge import (
+    TOMB_COL,
+    StateTable,
+    _erase_dropped,
+    _merge_apply,
+    staged_batch,
+)
 from monstache_spark.operators.similarity import pq_codebooks
 
 
@@ -163,8 +168,7 @@ class IvfPqIndexTable:
         arithmetic into EVERY per-batch plan, and each analyzer /
         optimizer pass walks that tree again — per micro-batch the
         driver burned ~1 s building and ~1-2 s optimizing plans whose
-        data work is 300 rows (and ``_merge_apply`` references the
-        encode subtree twice, doubling the walks).  The checkpoint
+        data work is 300 rows.  The checkpoint
         collapses the constants into a single-row ``LogicalRDD`` —
         the mega-literal plan is analyzed ONCE per table instance,
         and every batch plan just broadcast-cross-joins one tiny
@@ -310,52 +314,25 @@ class IvfPqIndexTable:
         """Apply one micro-batch of envelope ops ``(op, ns, id,
         version, <vec_col>)`` under the document sink's version guard.
 
-        Compaction is ONE keyed window pass: ``row_number`` over
-        ``(ns, id)`` descending by version keeps the winning vector
-        row without a join back (versions are unique per event —
-        envelope contract, so the winner is deterministic); the r14
-        optimization round replaced the ``max(version)``-then-equi-join
-        shape, which cost a second exchange per micro-batch for the
-        same rows (guide §2.4 — the window needs only the one
-        partitioning the aggregate already established).  The winners
-        then assign+encode against the frozen quantizers.  Deletes
-        compact to ``(ns, id, max version)`` tombstones.  The
-        cross-batch rules are :func:`sinks.merge._merge_apply`
+        Staging is the document sink's own (:func:`sinks.merge.
+        staged_batch`): one keyed aggregation keeps each key's winning
+        vector (``max_by`` over the upsert versions — versions are
+        unique per event, envelope contract, so the winner is
+        deterministic) or stages the key as a tombstone, and the staged
+        frame is persisted once for the merge.  The live rows then
+        assign+encode against the frozen quantizers inside the merge
+        plan, which reads the encoded columns once (tombstones carry
+        null ``cell``/``codes``).  Drops erase as in the document sink.
+        The cross-batch rules are :func:`sinks.merge._merge_apply`
         verbatim."""
-        from pyspark.sql import Window
-
-        ups = ops.filter(F.col("op") != OP_DELETE)
-        w = Window.partitionBy("ns", "id").orderBy(F.col("version").desc())
-        up_rows = (
-            ups.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("ns", "id", "version", self.vec_col)
-        )
-        enriched = self.encode(up_rows, id_col="id").select(
-            "ns", "id", "version", self.vec_col, "cell", "codes"
-        )
-        # _merge_apply references the batch twice (the keep branch's
-        # version probe and the win branch), which re-executes the
-        # window compaction + encode subtree per reference; persist +
-        # materialize runs it ONCE per batch and the merge reads the
-        # cached micro-batch-sized block (guide §5 — persist when a
-        # frame is reused AND recomputing costs more; persist keeps
-        # the plan's statistics, unlike localCheckpoint, so the merge
-        # joins keep their broadcast-side choice at scale)
-        enriched = enriched.persist()
-        try:
-            enriched.count()
-            tombs = (
-                ops.filter(F.col("op") == OP_DELETE)
-                .groupBy("ns", "id")
-                .agg(F.max("version").alias("version"))
+        with staged_batch(ops, (self.vec_col,), prefix="") as (staged, drops, _):
+            enriched = (
+                self.encode(staged, id_col="id")
+                .withColumn("cell", F.when(~F.col(TOMB_COL), F.col("cell")))
+                .withColumn("codes", F.when(~F.col(TOMB_COL), F.col("codes")))
             )
-            merged = _merge_apply(
-                self._state.read(include_tombstones=True), enriched, tombs
-            )
-            self._state._commit(merged)
-        finally:
-            enriched.unpersist(False)
+            stored = self._state.read(include_tombstones=True, session=ops.sparkSession)
+            self._state._commit(_erase_dropped(_merge_apply(stored, enriched), drops))
 
     # -- read side -----------------------------------------------------------
     def read(self) -> DataFrame | None:

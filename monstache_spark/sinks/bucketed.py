@@ -14,7 +14,8 @@ effect here with plain parquet:
 - a merge rewrites ONLY buckets containing batch keys; untouched
   buckets keep their existing files (the manifest re-points to them)
 - commits are atomic: write new bucket dirs → write manifest v{n+1} →
-  flip CURRENT; readers always see a complete manifest
+  swap CURRENT in (temp file + ``os.replace`` for both pointer files);
+  readers always see a complete manifest
 
 Drops (K6) are namespace-wide and can touch any bucket — they force a
 full rewrite, which matches the reference treating drops as rare
@@ -31,13 +32,13 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from monstache_spark.envelope import OP_DELETE, OP_DROP, OP_DROP_DB
-from monstache_spark.operators.materialize import last_state
 from monstache_spark.sinks.merge import (
     TOMB_COL,
     _erase_dropped,
     _merge_apply,
     _prune_old_tombstones,
+    staged_batch,
+    write_pointer,
 )
 
 BUCKET_COL = "_bucket"
@@ -57,11 +58,15 @@ class BucketedStateTable:
         path: str,
         n_buckets: int = 16,
         tombstone_retention: int | None = None,
+        dropped_databases: bool = True,
+        dropped_collections: bool = True,
     ):
         self.spark = spark
         self.path = path
         self.n_buckets = n_buckets
         self.tombstone_retention = tombstone_retention
+        self.dropped_databases = dropped_databases
+        self.dropped_collections = dropped_collections
         os.makedirs(path, exist_ok=True)
 
     # -- manifest plumbing ------------------------------------------------
@@ -87,10 +92,14 @@ class BucketedStateTable:
     # -- read -------------------------------------------------------------
 
     def read(
-        self, buckets: list[int] | None = None, include_tombstones: bool = False
+        self,
+        buckets: list[int] | None = None,
+        include_tombstones: bool = False,
+        session: SparkSession | None = None,
     ) -> DataFrame | None:
         """Full state, or only the given buckets (partition pruning:
-        point-lookups/joins by key read 1/n_buckets of the data)."""
+        point-lookups/joins by key read 1/n_buckets of the data).
+        ``session`` as in ``StateTable.read``."""
         dirs = self._bucket_dirs()
         if not dirs:
             return None
@@ -98,7 +107,7 @@ class BucketedStateTable:
             dirs = {b: d for b, d in dirs.items() if int(b) in set(buckets)}
             if not dirs:
                 return None
-        df = self.spark.read.parquet(*dirs.values())
+        df = (session or self.spark).read.parquet(*dirs.values())
         if include_tombstones or TOMB_COL not in df.columns:
             return df
         return df.filter(~F.col(TOMB_COL)).drop(TOMB_COL)
@@ -106,38 +115,25 @@ class BucketedStateTable:
     # -- merge ------------------------------------------------------------
 
     def merge_batch(self, ops: DataFrame) -> None:
-        drops = ops.filter(F.col("op").isin(OP_DROP, OP_DROP_DB))
-        data_ops = ops.filter(~F.col("op").isin(OP_DROP, OP_DROP_DB))
-        compacted = last_state(data_ops.filter(F.col("op") != OP_DELETE))
-        tombs = (
-            data_ops.filter(F.col("op") == OP_DELETE)
-            .groupBy("ns", "id")
-            .agg(F.max("version").alias("version"))
-        )
-        drop_rows = [
-            tuple(r)
-            for r in drops.groupBy("op", "ns").agg(F.max("version").alias("v")).collect()
-        ]
-
-        if drop_rows:
-            touched = set(range(self.n_buckets))  # ns-wide: any bucket
-        else:
-            touched = {
-                int(r[0])
-                for r in compacted.select(bucket_of(self.n_buckets)).distinct().collect()
-            } | {
-                int(r[0])
-                for r in tombs.select(bucket_of(self.n_buckets)).distinct().collect()
-            }
-        if not touched and not drop_rows:
-            return
-
-        current_touched = self.read(buckets=sorted(touched), include_tombstones=True)
-        merged = _merge_apply(current_touched, compacted, tombs)
-        merged = _erase_dropped(merged, drop_rows)
-        if self.tombstone_retention is not None:
-            merged = _prune_old_tombstones(merged, data_ops, self.tombstone_retention)
-        self._commit_buckets(merged, touched)
+        """Stage the batch once; its touched buckets come from the same
+        collect that reads its drops (a drop touches every bucket)."""
+        with staged_batch(
+            ops,
+            dropped_databases=self.dropped_databases,
+            dropped_collections=self.dropped_collections,
+            bucket=bucket_of(self.n_buckets),
+        ) as (staged, drops, touched):
+            if drops:
+                touched = set(range(self.n_buckets))  # ns-wide: any bucket
+            if not touched:
+                return
+            current_touched = self.read(
+                buckets=sorted(touched), include_tombstones=True, session=ops.sparkSession
+            )
+            merged = _erase_dropped(_merge_apply(current_touched, staged), drops)
+            if self.tombstone_retention is not None:
+                merged = _prune_old_tombstones(merged, staged, self.tombstone_retention)
+            self._commit_buckets(merged, touched)
 
     def prune_tombstones(self, before_version: int) -> None:
         """Explicit gc_deletes sweep — rewrites every bucket (rare,
@@ -173,10 +169,8 @@ class BucketedStateTable:
                 # touched but empty after merge: bucket has no rows, omit
             elif str(b) in old:
                 manifest[str(b)] = old[str(b)]
-        with open(os.path.join(self.path, f"manifest_v{v + 1}.json"), "w") as f:
-            json.dump(manifest, f)
-        with open(self._current_file(), "w") as f:
-            f.write(str(v + 1))
+        write_pointer(os.path.join(self.path, f"manifest_v{v + 1}.json"), json.dumps(manifest))
+        write_pointer(self._current_file(), str(v + 1))
         self._gc(keep=(v, v + 1))
 
     def _gc(self, keep: tuple[int, ...]) -> None:
@@ -194,7 +188,7 @@ class BucketedStateTable:
             full = os.path.join(self.path, entry)
             if entry.startswith("commit_v") and os.path.isdir(full) and full not in live:
                 shutil.rmtree(full, ignore_errors=True)
-            if entry.startswith("manifest_v"):
+            if entry.startswith("manifest_v") and entry.endswith(".json"):
                 v = int(entry[len("manifest_v"):-len(".json")])
                 if v not in keep:
                     os.remove(full)

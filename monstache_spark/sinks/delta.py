@@ -1,17 +1,18 @@
 """Delta-backed state table — the 100 TB deployment answer to
-``StateTable``'s parquet+CURRENT-pointer commit (merge.py:187-194,
-which is single-writer by construction).
+``StateTable``'s parquet+CURRENT-pointer commit
+(``merge.py:StateTable._commit``, which is single-writer by
+construction).
 
 Same public surface (``read`` / ``merge_batch``) and the SAME
 version-guard semantics (test-pinned by tests/test_delta_state.py
-against the shared ``_stage_batch``; the parquet backend's semantics
+against the shared ``staged_batch``; the parquet backend's semantics
 tests are the oracle), but the cross-batch guard runs as a Delta
 ``MERGE`` — transactional, concurrent-writer safe, and O(touched
 files) via Delta's data skipping instead of a full-table rewrite:
 
-* batch staging (within-batch ties: delete beats upsert at the same
-  version) is ``merge.py:_stage_batch`` — one code path for every
-  backend;
+* batch staging (one keyed aggregation; within-batch ties: delete
+  beats upsert at the same version; drops read from the staged frame)
+  is ``merge.py:staged_batch`` — one code path for every backend;
 * cross-batch ties land in the MERGE predicate: a staged row replaces
   a stored row iff ``version > stored.version`` OR (equal version AND
   the stored row is not a tombstone) — the exact complement of the
@@ -31,14 +32,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from monstache_spark.envelope import OP_DELETE, OP_DROP, OP_DROP_DB
+from monstache_spark.envelope import OP_DROP_DB
 from monstache_spark.operators.filters import ns_database
-from monstache_spark.operators.materialize import last_state
-from monstache_spark.sinks.merge import TOMB_COL, _stage_batch
+from monstache_spark.operators.materialize import _STATE_COLS
+from monstache_spark.sinks.merge import KIND_COL, TOMB_COL, staged_batch
 
 
 # The cross-batch MERGE update predicate — the ONE piece of semantics
-# this backend adds over the shared ``_stage_batch``: a staged row
+# this backend adds over the shared ``staged_batch``: a staged row
 # replaces a stored row iff strictly newer, or tied with a
 # non-tombstone stored row (the exact complement of
 # merge.py:_merge_apply's keep rule).  Module-level so the
@@ -95,12 +96,16 @@ class DeltaStateTable:
         path: str,
         tombstone_retention: int | None = None,
         payload_cols: tuple[str, ...] | None = None,
+        dropped_databases: bool = True,
+        dropped_collections: bool = True,
     ):
         self._delta = _require_delta()
         self.spark = spark
         self.path = path
         self.tombstone_retention = tombstone_retention
-        self.payload_cols = payload_cols
+        self.payload_cols = payload_cols or _STATE_COLS
+        self.dropped_databases = dropped_databases
+        self.dropped_collections = dropped_collections
 
     def _table(self):
         return self._delta.forPath(self.spark, self.path)
@@ -117,54 +122,42 @@ class DeltaStateTable:
         return df.filter(~F.col(TOMB_COL)).drop(TOMB_COL)
 
     def merge_batch(self, ops: DataFrame) -> None:
-        drops = ops.filter(F.col("op").isin(OP_DROP, OP_DROP_DB))
-        data_ops = ops.filter(~F.col("op").isin(OP_DROP, OP_DROP_DB))
-        drop_rows = [
-            tuple(r)
-            for r in drops.groupBy("op", "ns").agg(F.max("version").alias("v")).collect()
-        ]
-        if self.payload_cols is None:
-            compacted = last_state(data_ops.filter(F.col("op") != OP_DELETE))
-        else:
-            compacted = last_state(
-                data_ops.filter(F.col("op") != OP_DELETE), payload_cols=self.payload_cols
-            )
-        tombs = (
-            data_ops.filter(F.col("op") == OP_DELETE)
-            .groupBy("ns", "id")
-            .agg(F.max("version").alias("version"))
-        )
-        staged = _stage_batch(compacted, tombs)
-
-        if not self._exists():
-            staged.write.format("delta").mode("overwrite").save(self.path)
-        else:
-            # cross-batch guard as the MERGE predicate — exact
-            # complement of merge.py:_merge_apply's keep rule: the
-            # staged row wins iff strictly newer, or tied with a
-            # non-tombstone stored row (delete beats equal-version
-            # upsert across batches too)
-            (
-                self._table()
-                .alias("t")
-                .merge(
-                    staged.alias("s"),
-                    "t.ns = s.ns AND t.id = s.id",
+        with staged_batch(
+            ops,
+            self.payload_cols,
+            dropped_databases=self.dropped_databases,
+            dropped_collections=self.dropped_collections,
+        ) as (staged_all, drops, _):
+            staged = staged_all.filter(F.col(KIND_COL) == 0).drop(KIND_COL)
+            if not self._exists():
+                staged.write.format("delta").mode("overwrite").save(self.path)
+            else:
+                # cross-batch guard as the MERGE predicate — exact
+                # complement of merge.py:_merge_apply's keep rule: the
+                # staged row wins iff strictly newer, or tied with a
+                # non-tombstone stored row (delete beats equal-version
+                # upsert across batches too)
+                (
+                    self._table()
+                    .alias("t")
+                    .merge(
+                        staged.alias("s"),
+                        "t.ns = s.ns AND t.id = s.id",
+                    )
+                    .whenMatchedUpdateAll(condition=MERGE_UPDATE_CONDITION)
+                    .whenNotMatchedInsertAll()
+                    .execute()
                 )
-                .whenMatchedUpdateAll(condition=MERGE_UPDATE_CONDITION)
-                .whenNotMatchedInsertAll()
-                .execute()
-            )
 
-        for op, ns, v in drop_rows:
-            self._table().delete(drop_condition(op, ns, v))
+            for op, ns, v in drops:
+                self._table().delete(drop_condition(op, ns, v))
 
-        if self.tombstone_retention is not None:
-            hwm = data_ops.agg(F.max("version")).first()[0]
-            if hwm is not None:
-                self._table().delete(
-                    retention_condition(hwm, self.tombstone_retention)
-                )
+            if self.tombstone_retention is not None:
+                hwm = staged.agg(F.max("version")).first()[0]
+                if hwm is not None:
+                    self._table().delete(
+                        retention_condition(hwm, self.tombstone_retention)
+                    )
 
     def prune_tombstones(self, before_version: int) -> None:
         if self._exists():

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from monstache_spark.operators.aggs import fixed_interval_seconds
+from monstache_spark.sinks.merge import write_pointer
 
 
 class DownsampleTable:
@@ -118,8 +119,7 @@ class DownsampleTable:
         if batch_id is not None:
             with open(os.path.join(new_dir, "_BATCH_ID"), "w") as f:
                 f.write(str(batch_id))
-        with open(self._current_file(), "w") as f:
-            f.write(str(v + 1))
+        write_pointer(self._current_file(), str(v + 1))
         old_dir = os.path.join(self.path, f"v{v}")
         if v and os.path.isdir(old_dir):
             shutil.rmtree(old_dir, ignore_errors=True)

@@ -96,11 +96,27 @@ def transform(ops: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 
 def _make_state(spark: SparkSession, cfg: PipelineConfig):
+    drops = {
+        "dropped_databases": cfg.dropped_databases,
+        "dropped_collections": cfg.dropped_collections,
+    }
     if cfg.state_buckets > 0:
         from monstache_spark.sinks.bucketed import BucketedStateTable
 
-        return BucketedStateTable(spark, cfg.state_dir, n_buckets=cfg.state_buckets)
-    return StateTable(spark, cfg.state_dir)
+        return BucketedStateTable(
+            spark, cfg.state_dir, n_buckets=cfg.state_buckets, **drops
+        )
+    return StateTable(spark, cfg.state_dir, **drops)
+
+
+def _as_envelope(source: DataFrame) -> DataFrame:
+    """The source as CDC envelope ops: a source that already has the
+    envelope schema (``op`` and ``version`` columns — e.g. translated
+    change events, which carry drops) passes through; an ``events``
+    source is mapped by ``events_to_envelope``."""
+    if {"op", "version"} <= set(source.columns):
+        return source
+    return events_to_envelope(source)
 
 
 def run_stream(
@@ -110,8 +126,8 @@ def run_stream(
     events_schema=None,
     drain: bool = True,
 ) -> StateTable:
-    """Stream the events parquet as a CDC source into the state table.
-    ``drain=True`` (tests/backfills) drains with availableNow and
+    """Stream the events (or envelope) parquet as a CDC source into the
+    state table. ``drain=True`` (tests/backfills) drains with availableNow and
     returns; ``drain=False`` runs continuously at the configured
     elasticsearch-max-seconds cadence until externally stopped."""
     if events_schema is None:
@@ -124,7 +140,7 @@ def run_stream(
     stream = reader.parquet(base_dir)
     from monstache_spark.sources.testdata import normalize_nanos
 
-    ops = transform(events_to_envelope(normalize_nanos(stream)), cfg)
+    ops = transform(_as_envelope(normalize_nanos(stream)), cfg)
     state = _make_state(spark, cfg)
 
     if cfg.sink_max_retries or cfg.fail_fast:
@@ -154,7 +170,7 @@ def run_stream(
 
 def run_batch(spark: SparkSession, events: DataFrame, cfg: PipelineConfig) -> StateTable:
     """Direct-read/backfill path (§3.2): same transform chain, batch."""
-    ops = transform(events_to_envelope(events), cfg)
+    ops = transform(_as_envelope(events), cfg)
     state = _make_state(spark, cfg)
     state.merge_batch(ops)
     return state

@@ -1,4 +1,4 @@
-"""DeltaStateTable: same _merge_apply semantics as StateTable, behind
+"""DeltaStateTable: same merge semantics as StateTable, behind
 the same interface, committed through Delta's transaction log.
 
 The semantics suite below runs against BOTH backends; the Delta
@@ -13,6 +13,8 @@ import importlib.util
 import pytest
 from pyspark.sql import functions as F  # noqa: F401  (query literals below)
 
+from monstache_spark.sinks.merge import KIND_COL, staged_batch
+
 DELTA_AVAILABLE = importlib.util.find_spec("delta") is not None
 
 ENV_SCHEMA = (
@@ -24,7 +26,7 @@ ENV_SCHEMA = (
 class SimulatedDeltaBackend:
     """delta-spark is absent in this image, so the MERGE path would be
     test-skipped; this backend exercises the SAME contract pieces
-    DeltaStateTable ships — the shared ``_stage_batch`` staging, the
+    DeltaStateTable ships — the shared ``staged_batch`` staging, the
     module-level ``MERGE_UPDATE_CONDITION`` string (evaluated verbatim
     over t/s-aliased frames, exactly the whenMatchedUpdateAll
     predicate), ``drop_condition`` and ``retention_condition`` — with
@@ -75,67 +77,50 @@ class SimulatedDeltaBackend:
         return df.filter(~F.col(TOMB_COL)).drop(TOMB_COL)
 
     def merge_batch(self, ops):
-        from monstache_spark.envelope import OP_DELETE, OP_DROP, OP_DROP_DB
-        from monstache_spark.operators.materialize import last_state
         from monstache_spark.sinks.delta import (
             MERGE_UPDATE_CONDITION,
             drop_condition,
             retention_condition,
         )
-        from monstache_spark.sinks.merge import _stage_batch
 
-        drops = ops.filter(F.col("op").isin(OP_DROP, OP_DROP_DB))
-        data_ops = ops.filter(~F.col("op").isin(OP_DROP, OP_DROP_DB))
-        drop_rows = [
-            tuple(r)
-            for r in drops.groupBy("op", "ns")
-            .agg(F.max("version").alias("v"))
-            .collect()
-        ]
-        compacted = last_state(data_ops.filter(F.col("op") != OP_DELETE))
-        tombs = (
-            data_ops.filter(F.col("op") == OP_DELETE)
-            .groupBy("ns", "id")
-            .agg(F.max("version").alias("version"))
-        )
-        staged = _stage_batch(compacted, tombs)
-
-        stored = self.read(include_tombstones=True)
-        if stored is None:
-            merged = staged
-        else:
-            # the MERGE, spelled as joins over t/s aliases so the
-            # SHIPPED predicate string evaluates verbatim:
-            # matched+condition -> staged row; matched+!condition ->
-            # stored row; s-only insert; t-only keep
-            cond = F.expr(MERGE_UPDATE_CONDITION)
-            t, s = stored.alias("t"), staged.alias("s")
-            key = [F.col("t.ns") == F.col("s.ns"),
-                   F.col("t.id") == F.col("s.id")]
-            matched_updated = (
-                t.join(s, key, "inner").filter(cond).select("s.*")
-            )
-            matched_kept = (
-                t.join(s, key, "inner").filter(~cond).select("t.*")
-            )
-            s_only = t.join(s, key, "right_outer").filter(
-                F.col("t.ns").isNull()
-            ).select("s.*")
-            t_only = t.join(s, key, "left_anti").select("t.*")
-            merged = (
-                matched_updated.unionByName(matched_kept)
-                .unionByName(s_only)
-                .unionByName(t_only)
-            )
-        for op, ns, v in drop_rows:
-            merged = merged.filter(~drop_condition(op, ns, v))
-        if self.tombstone_retention is not None:
-            hwm = data_ops.agg(F.max("version")).first()[0]
-            if hwm is not None:
-                merged = merged.filter(
-                    ~retention_condition(hwm, self.tombstone_retention)
+        with staged_batch(ops) as (staged_all, drop_rows, _):
+            staged = staged_all.filter(F.col(KIND_COL) == 0).drop(KIND_COL)
+            stored = self.read(include_tombstones=True)
+            if stored is None:
+                merged = staged
+            else:
+                # the MERGE, spelled as joins over t/s aliases so the
+                # SHIPPED predicate string evaluates verbatim:
+                # matched+condition -> staged row; matched+!condition ->
+                # stored row; s-only insert; t-only keep
+                cond = F.expr(MERGE_UPDATE_CONDITION)
+                t, s = stored.alias("t"), staged.alias("s")
+                key = [F.col("t.ns") == F.col("s.ns"),
+                       F.col("t.id") == F.col("s.id")]
+                matched_updated = (
+                    t.join(s, key, "inner").filter(cond).select("s.*")
                 )
-        self._commit(merged)
+                matched_kept = (
+                    t.join(s, key, "inner").filter(~cond).select("t.*")
+                )
+                s_only = t.join(s, key, "right_outer").filter(
+                    F.col("t.ns").isNull()
+                ).select("s.*")
+                t_only = t.join(s, key, "left_anti").select("t.*")
+                merged = (
+                    matched_updated.unionByName(matched_kept)
+                    .unionByName(s_only)
+                    .unionByName(t_only)
+                )
+            for op, ns, v in drop_rows:
+                merged = merged.filter(~drop_condition(op, ns, v))
+            if self.tombstone_retention is not None:
+                hwm = staged.agg(F.max("version")).first()[0]
+                if hwm is not None:
+                    merged = merged.filter(
+                        ~retention_condition(hwm, self.tombstone_retention)
+                    )
+            self._commit(merged)
 
     def prune_tombstones(self, before_version):
         from monstache_spark.sinks.merge import TOMB_COL
