@@ -15,7 +15,8 @@ effect here with plain parquet:
   buckets keep their existing files (the manifest re-points to them)
 - commits are atomic: write new bucket dirs → write manifest v{n+1} →
   swap CURRENT in (temp file + ``os.replace`` for both pointer files);
-  readers always see a complete manifest
+  readers, and a process that dies mid-commit, always see a complete
+  manifest (``sinks.merge`` says what an OS or power failure can lose)
 
 Drops (K6) are namespace-wide and can touch any bucket — they force a
 full rewrite, which matches the reference treating drops as rare

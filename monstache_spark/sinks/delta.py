@@ -96,16 +96,12 @@ class DeltaStateTable:
         path: str,
         tombstone_retention: int | None = None,
         payload_cols: tuple[str, ...] | None = None,
-        dropped_databases: bool = True,
-        dropped_collections: bool = True,
     ):
         self._delta = _require_delta()
         self.spark = spark
         self.path = path
         self.tombstone_retention = tombstone_retention
         self.payload_cols = payload_cols or _STATE_COLS
-        self.dropped_databases = dropped_databases
-        self.dropped_collections = dropped_collections
 
     def _table(self):
         return self._delta.forPath(self.spark, self.path)
@@ -122,12 +118,7 @@ class DeltaStateTable:
         return df.filter(~F.col(TOMB_COL)).drop(TOMB_COL)
 
     def merge_batch(self, ops: DataFrame) -> None:
-        with staged_batch(
-            ops,
-            self.payload_cols,
-            dropped_databases=self.dropped_databases,
-            dropped_collections=self.dropped_collections,
-        ) as (staged_all, drops, _):
+        with staged_batch(ops, self.payload_cols) as (staged_all, drops, _):
             staged = staged_all.filter(F.col(KIND_COL) == 0).drop(KIND_COL)
             if not self._exists():
                 staged.write.format("delta").mode("overwrite").save(self.path)

@@ -55,8 +55,11 @@ with ``tombstone_retention`` (version units) or an explicit
 ``prune_tombstones()``.
 
 Pointer files (``CURRENT``, the bucketed sink's manifests) are written
-to a temp file and swapped in with ``os.replace``, so a crash during a
-commit leaves the previous version readable.
+to a temp file and swapped in with ``os.replace``, so a process that
+dies during a commit leaves the previous version readable. That is not
+durability against an OS or power failure: the pointer is fsynced, but
+Spark's parquet writer does not fsync the data files it points to, and
+the previous version's directory is removed right after the swap.
 """
 
 from __future__ import annotations
@@ -81,11 +84,15 @@ _DROP_KINDS = {1: OP_DROP, 2: OP_DROP_DB}
 
 
 def write_pointer(path: str, text: str) -> None:
-    """Replace the pointer file ``path`` atomically: a reader (or a
-    crash) sees the old content or the new, never a truncated file."""
+    """Replace the pointer file ``path`` atomically: a reader, or a
+    process that dies mid-write, sees the old content or the new, never
+    a truncated file. The temp file is fsynced before the rename, so
+    the rename cannot reach the disk ahead of the pointer's content."""
     tmp = f"{path}.tmp"
     with open(tmp, "w") as f:
         f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
     os.replace(tmp, path)
 
 
