@@ -1248,8 +1248,8 @@ class FingerprintRegistry:
         write).  Single-writer, like admission itself: run it between
         batches, never concurrently with one — and a crash between
         the two renames leaves the data under ``<path>__old`` for
-        manual recovery (the transactional answer at 100 TB is the
-        Delta-backed state table, sinks/delta_state.py).  Returns the
+        manual recovery (the transactional answer at 100 TB is a
+        table format with a transaction log, Delta or Iceberg).  Returns the
         pre-compaction file count."""
         df = self.known()
         if df is None:

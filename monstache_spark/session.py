@@ -144,7 +144,12 @@ def stateful_shuffle_width(spark: SparkSession, cap: int = 8) -> int:
     than the cap is never widened."""
     env = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "")
     if env:
-        return max(1, int(env))
+        width = int(env) if env.strip().isdecimal() else 0
+        if width < 1:
+            raise ValueError(
+                f"SPARK_GRAFT_STATE_PARTITIONS must be a positive integer, got {env!r}"
+            )
+        return width
     return min(shuffle_partitions(spark), cap)
 
 

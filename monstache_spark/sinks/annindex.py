@@ -30,10 +30,12 @@ string enters an aggregation buffer over index state (the packed
 argmin inside :func:`pq_encode` obeys the same rule).  Batch staging
 is the document sink's single keyed aggregation; there the winning
 vector rides a ``max_by`` buffer, a sort-based aggregate over the
-micro-batch's rows only.  Staging, commit, versioning and tombstones
-are the document sink's own (:mod:`monstache_spark.sinks.merge`):
-directory-versioned commits with a CURRENT pointer, stale replays
-lose, a delete beats an equal-version upsert, tombstones persist so
+micro-batch's rows only.  Staging, merge, commit, versioning and
+tombstones are the document sink's own
+(:mod:`monstache_spark.sinks.merge`): the index state IS a
+``StateTable``, committed by the one shared versioned commit
+(``VersionedTable``: write ``v{n+1}``, swap CURRENT), so stale replays
+lose, a delete beats an equal-version upsert, and tombstones persist so
 late stale inserts stay dead.
 
 Scale notes (100 TB): centroids and codebooks are broadcast metadata;
@@ -50,13 +52,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from monstache_spark.sinks.merge import (
-    TOMB_COL,
-    StateTable,
-    _erase_dropped,
-    _merge_apply,
-    staged_batch,
-)
+from monstache_spark.sinks.merge import TOMB_COL, StateTable, staged_batch
 from monstache_spark.operators.similarity import pq_codebooks
 
 
@@ -322,17 +318,18 @@ class IvfPqIndexTable:
         frame is persisted once for the merge.  The live rows then
         assign+encode against the frozen quantizers inside the merge
         plan, which reads the encoded columns once (tombstones carry
-        null ``cell``/``codes``).  Drops erase as in the document sink.
-        The cross-batch rules are :func:`sinks.merge._merge_apply`
-        verbatim."""
+        null ``cell``/``codes``).  The encoded frame then goes through
+        the document sink's own merge-and-commit step
+        (``StateTable._apply``): the cross-batch rules of
+        :func:`sinks.merge._merge_apply`, the drop erase, and the one
+        versioned commit (:class:`sinks.merge.VersionedTable`)."""
         with staged_batch(ops, (self.vec_col,), prefix="") as (staged, drops, _):
             enriched = (
                 self.encode(staged, id_col="id")
                 .withColumn("cell", F.when(~F.col(TOMB_COL), F.col("cell")))
                 .withColumn("codes", F.when(~F.col(TOMB_COL), F.col("codes")))
             )
-            stored = self._state.read(include_tombstones=True, session=ops.sparkSession)
-            self._state._commit(_erase_dropped(_merge_apply(stored, enriched), drops))
+            self._state._apply(enriched, drops)
 
     # -- read side -----------------------------------------------------------
     def read(self) -> DataFrame | None:

@@ -38,6 +38,7 @@ from monstache_spark.sinks.merge import (
     _erase_dropped,
     _merge_apply,
     _prune_old_tombstones,
+    read_pointer,
     staged_batch,
     write_pointer,
 )
@@ -76,11 +77,7 @@ class BucketedStateTable:
         return os.path.join(self.path, "CURRENT")
 
     def _current_version(self) -> int:
-        try:
-            with open(self._current_file()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return 0
+        return read_pointer(self._current_file())
 
     def _manifest(self, v: int) -> dict[str, str]:
         with open(os.path.join(self.path, f"manifest_v{v}.json")) as f:

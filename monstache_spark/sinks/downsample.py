@@ -23,19 +23,21 @@ Contract: TSDB documents are immutable measurement points, so the
 stream is APPEND-ONLY — there is no version guard because there are
 no updates or deletes to guard (ES enforces the same: downsample
 sources must be read-only indices).  Additive stats cannot
-distinguish a replay from a new point, so the sink carries its own
-exactly-once guard at the MICRO-BATCH grain: ``merge_batch`` takes
-the ``foreachBatch`` epoch id, records the last applied id with each
-committed state version, and SKIPS a batch it has already folded —
+distinguish a replay from a new point, so the sink guards exactly-once
+at the MICRO-BATCH grain: ``merge_batch`` takes the ``foreachBatch``
+epoch id, the shared versioned commit records it inside each committed
+state version, and a batch the table has already folded is SKIPPED —
 the standard idempotent-foreachBatch pattern, closing the
 crash-between-commit-and-checkpoint replay window.  Duplicate points
 WITHIN a delivery (at-least-once sources that re-emit rows inside
 new batch ids) still need ``streaming.windows.stream_dedup_keys``
 upstream.
 
-Storage is the pointer-versioned parquet commit of
-``sinks.merge.StateTable`` (write ``v{n+1}``, flip CURRENT): readers
-never see a partial merge.  Scale: each micro-batch costs ONE hash
+Storage is the one versioned commit every state sink shares,
+``sinks.merge.VersionedTable`` (write ``v{n+1}`` with its epoch
+marker, swap CURRENT, remove ``v{n}``): readers never see a partial
+merge, and a warm batch reads the committed version with the schema
+it wrote (no inference job).  Scale: each micro-batch costs ONE hash
 agg over (state ∪ state-shaped batch points) — the groupBy's
 map-side partial aggregation rolls the batch up before the exchange,
 so the shuffle carries bucket-cardinality-sized partials; the
@@ -44,17 +46,14 @@ corpus-sized work is only ever the arriving batch.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from monstache_spark.operators.aggs import fixed_interval_seconds
-from monstache_spark.sinks.merge import write_pointer
+from monstache_spark.sinks.merge import VersionedTable
 
 
-class DownsampleTable:
+class DownsampleTable(VersionedTable):
     def __init__(
         self,
         spark: SparkSession,
@@ -69,60 +68,13 @@ class DownsampleTable:
         w = fixed_interval_seconds(fixed_interval)
         if w is None:
             raise ValueError(f"unsupported fixed_interval: {fixed_interval}")
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.ts_col = ts_col
         self.dims = list(dims)
         self.gauges = list(gauges)
         self.counters = list(counters)
         self.id_col = id_col
         self._w_us = w * 1_000_000
-        os.makedirs(path, exist_ok=True)
-
-    # -- pointer-versioned commits (the StateTable shape) -------------
-    def _current_file(self) -> str:
-        return os.path.join(self.path, "CURRENT")
-
-    def _current_version(self) -> int:
-        try:
-            with open(self._current_file()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return 0
-
-    def _read_raw(self) -> DataFrame | None:
-        v = self._current_version()
-        if v == 0:
-            return None
-        return self.spark.read.parquet(os.path.join(self.path, f"v{v}"))
-
-    def _last_applied(self) -> int:
-        # the applied batch id lives INSIDE the current version dir, so
-        # the CURRENT pointer flip advances state and batch id
-        # ATOMICALLY — a crash on either side of the flip leaves a
-        # consistent (state, last-batch) pair: before it the replayed
-        # batch re-folds against the OLD state (the orphaned v-dir is
-        # simply overwritten), after it the replay is skipped
-        v = self._current_version()
-        if v == 0:
-            return -1
-        try:
-            with open(os.path.join(self.path, f"v{v}", "_BATCH_ID")) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return -1
-
-    def _commit(self, df: DataFrame, batch_id: int | None = None) -> None:
-        v = self._current_version()
-        new_dir = os.path.join(self.path, f"v{v + 1}")
-        df.write.mode("overwrite").parquet(new_dir)
-        if batch_id is not None:
-            with open(os.path.join(new_dir, "_BATCH_ID"), "w") as f:
-                f.write(str(batch_id))
-        write_pointer(self._current_file(), str(v + 1))
-        old_dir = os.path.join(self.path, f"v{v}")
-        if v and os.path.isdir(old_dir):
-            shutil.rmtree(old_dir, ignore_errors=True)
 
     # -- rollup arithmetic --------------------------------------------
     # the packed ordering key (built inside downsample_aggs) carries
@@ -216,7 +168,7 @@ class DownsampleTable:
         guarantees per checkpoint."""
         if batch_id is not None and batch_id <= self._last_applied():
             return
-        cur = self._read_raw()
+        cur = self._read_committed()
         # first batch: the plain rollup; thereafter: ONE hash agg over
         # state ∪ state-shaped points (map-side partial aggregation
         # rolls the batch up inside the same exchange — see
@@ -232,7 +184,7 @@ class DownsampleTable:
         output shape (sums cast to double, pack columns dropped) —
         restatement-equal to the batch operator over every point the
         sink has absorbed."""
-        raw = self._read_raw()
+        raw = self._read_committed()
         if raw is None:
             return None
         cols = [*self.dims, "bucket", "doc_count"]

@@ -14,8 +14,10 @@ idempotent MERGE per micro-batch:
       WHEN MATCHED AND src.version >= tgt.version THEN UPDATE
       WHEN NOT MATCHED AND src.op != 'd' THEN INSERT
 
-Without Delta/Iceberg jars in this image, the MERGE is emulated over
-parquet and atomically swapped via directory versioning. On a real
+Without a lakehouse table format (Delta/Iceberg) on the classpath, the
+MERGE is emulated over parquet and committed by
+:class:`VersionedTable`, the one versioned commit every state sink
+shares (write ``v{n+1}``, swap CURRENT, remove ``v{n}``). On a real
 lakehouse this maps 1:1 onto ``MERGE INTO`` (and the version guard
 rides along unchanged). One merge is two plans:
 
@@ -29,12 +31,13 @@ rides along unchanged). One merge is two plans:
    beats an upsert at the same version. :func:`staged_batch` persists
    the staged frame once, and one ``collect`` of it both reads the drop
    rows and fills the cache.
-2. **Merge** (:func:`_merge_apply`) — one SQL statement, with only
-   batch-sized broadcast build sides and no shuffle of the state:
-   ``keep`` = state ⟕ broadcast(staged keys) keeps each stored row the
-   batch does not beat; ``win`` = staged ⟕ broadcast(state rows
-   semi-joined to the staged keys) keeps each staged row that beats
-   its stored row. The two are exact complements on matched keys.
+2. **Merge** (:func:`_merge_apply`, run by ``StateTable._apply``) — one
+   SQL statement, with only batch-sized broadcast build sides and no
+   shuffle of the state: ``keep`` = state ⟕ broadcast(staged keys)
+   keeps each stored row the batch does not beat; ``win`` = staged ⟕
+   broadcast(state rows semi-joined to the staged keys) keeps each
+   staged row that beats its stored row. The two are exact complements
+   on matched keys.
 
 Drop propagation (K6, doDrop monstache.go:3056-3075): ``drop``/
 ``dropDatabase`` ops delete state rows of the matching namespace(s)
@@ -54,12 +57,13 @@ at-least-once replay safe (monstache.go:4077-4080). Bound their growth
 with ``tombstone_retention`` (version units) or an explicit
 ``prune_tombstones()``.
 
-Pointer files (``CURRENT``, the bucketed sink's manifests) are written
-to a temp file and swapped in with ``os.replace``, so a process that
-dies during a commit leaves the previous version readable. That is not
-durability against an OS or power failure: the pointer is fsynced, but
-Spark's parquet writer does not fsync the data files it points to, and
-the previous version's directory is removed right after the swap.
+Pointer files (``CURRENT``, the bucketed sink's manifests, the
+``_BATCH_ID`` epoch marker) are written to a temp file and swapped in
+with ``os.replace``, so a process that dies during a commit leaves the
+previous version readable. That is not durability against an OS or
+power failure: the pointer is fsynced, but Spark's parquet writer does
+not fsync the data files it points to, and the previous version's
+directory is removed right after the swap.
 """
 
 from __future__ import annotations
@@ -81,6 +85,8 @@ TOMB_COL = "_tomb"
 # staged-frame row kind: 0 = data key, else one of _DROP_KINDS
 KIND_COL = "_kind"
 _DROP_KINDS = {1: OP_DROP, 2: OP_DROP_DB}
+# epoch marker file inside a version directory (VersionedTable._commit)
+_BATCH_MARKER = "_BATCH_ID"
 
 
 def write_pointer(path: str, text: str) -> None:
@@ -94,6 +100,16 @@ def write_pointer(path: str, text: str) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
+
+
+def read_pointer(path: str, missing: int = 0) -> int:
+    """The integer in the pointer file ``path`` (a ``CURRENT`` version,
+    an epoch marker), or ``missing`` when the file does not exist."""
+    try:
+        with open(path) as f:
+            return int(f.read().strip())
+    except FileNotFoundError:
+        return missing
 
 
 def _q(name: str) -> str:
@@ -299,14 +315,77 @@ def protected_deletes(state: DataFrame, deletes: DataFrame) -> tuple[DataFrame, 
     return applied, refused
 
 
-class StateTable:
-    """Parquet-backed keyed state table with version-guarded merges.
+class VersionedTable:
+    """A parquet table committed by version pointer: ``v{n}/`` holds
+    version n's parquet files and the ``CURRENT`` file names the
+    committed n (0, no file, before the first commit).
 
-    Directory-versioned commits: each merge writes ``v{n+1}`` then
-    swaps the CURRENT pointer file in atomically — readers never see
-    partial writes (the poor man's transaction log; Delta/Iceberg
-    replace this wholesale at scale).
-    """
+    :meth:`_commit` writes ``v{n+1}``, swaps CURRENT in with
+    :func:`write_pointer`, then removes ``v{n}`` — readers never see a
+    partial write (the poor man's transaction log; Delta/Iceberg replace
+    this wholesale at scale). A commit may carry the ``foreachBatch``
+    epoch id it folded as a ``_BATCH_ID`` marker INSIDE ``v{n+1}``, so
+    the one pointer swap advances state and epoch together — the
+    idempotent-foreachBatch contract (Structured Streaming, SIGMOD
+    2018): a crash before the swap leaves the old (state, epoch) pair
+    and the replayed epoch re-folds against it (the orphaned directory
+    is overwritten); after the swap :meth:`_last_applied` names the
+    epoch and its replay can be skipped."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        self.spark = spark
+        self.path = path
+        # (version, schema) of the last version this instance committed
+        # or read: reading that version again skips schema inference
+        self._schema: tuple[int, object] | None = None
+        os.makedirs(path, exist_ok=True)
+
+    def _current_file(self) -> str:
+        return os.path.join(self.path, "CURRENT")
+
+    def _current_version(self) -> int:
+        return read_pointer(self._current_file())
+
+    def _version_dir(self, v: int) -> str:
+        return os.path.join(self.path, f"v{v}")
+
+    def _read_committed(self, session: SparkSession | None = None) -> DataFrame | None:
+        """The committed version's rows as stored, or None before the
+        first commit. ``session`` builds the frame in another session —
+        a foreachBatch frame's, whose temp views a merge plan is
+        analyzed against."""
+        v = self._current_version()
+        if v == 0:
+            return None
+        reader = (session or self.spark).read
+        if self._schema is not None and self._schema[0] == v:
+            reader = reader.schema(self._schema[1])
+        df = reader.parquet(self._version_dir(v))
+        if self._schema is None or self._schema[0] != v:
+            self._schema = (v, df.schema)
+        return df
+
+    def _last_applied(self) -> int:
+        """The epoch id marked in the committed version, or -1."""
+        marker = os.path.join(self._version_dir(self._current_version()), _BATCH_MARKER)
+        return read_pointer(marker, missing=-1)
+
+    def _commit(self, df: DataFrame, batch_id: int | None = None) -> None:
+        v = self._current_version()
+        new_dir = self._version_dir(v + 1)
+        df.write.mode("overwrite").parquet(new_dir)
+        if batch_id is not None:
+            write_pointer(os.path.join(new_dir, _BATCH_MARKER), str(batch_id))
+        write_pointer(self._current_file(), str(v + 1))
+        self._schema = (v + 1, df.schema)
+        old_dir = self._version_dir(v)
+        if v and os.path.isdir(old_dir):
+            shutil.rmtree(old_dir, ignore_errors=True)
+
+
+class StateTable(VersionedTable):
+    """Parquet-backed keyed state table with version-guarded merges,
+    committed by :class:`VersionedTable`."""
 
     def __init__(
         self,
@@ -317,8 +396,7 @@ class StateTable:
         dropped_databases: bool = True,
         dropped_collections: bool = True,
     ):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         # keep delete tombstones only while `batch_max_version - version
         # <= retention` (version units — BSON-ts-like int64s here). None
         # = keep forever; prune explicitly via prune_tombstones().
@@ -335,51 +413,17 @@ class StateTable:
         # kind switched off is ignored by merge_batch
         self.dropped_databases = dropped_databases
         self.dropped_collections = dropped_collections
-        # (version, schema) of the last version this instance committed
-        # or read: reading that version again skips schema inference
-        self._schema: tuple[int, object] | None = None
-        os.makedirs(path, exist_ok=True)
-
-    def _current_file(self) -> str:
-        return os.path.join(self.path, "CURRENT")
-
-    def _current_version(self) -> int:
-        try:
-            with open(self._current_file()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return 0
 
     def read(
         self, include_tombstones: bool = False, session: SparkSession | None = None
     ) -> DataFrame | None:
         """The committed state: live rows, or with tombstones. ``session``
-        builds the frame in another session — a foreachBatch frame's,
-        whose temp views the merge plan is analyzed against."""
-        v = self._current_version()
-        if v == 0:
-            return None
-        reader = (session or self.spark).read
-        if self._schema is not None and self._schema[0] == v:
-            reader = reader.schema(self._schema[1])
-        df = reader.parquet(os.path.join(self.path, f"v{v}"))
-        if self._schema is None or self._schema[0] != v:
-            self._schema = (v, df.schema)
-        if TOMB_COL not in df.columns:  # table written before tombstone support
-            return df
-        if include_tombstones:
+        as in :meth:`VersionedTable._read_committed`."""
+        df = self._read_committed(session)
+        # a table written before tombstone support has no _tomb column
+        if df is None or include_tombstones or TOMB_COL not in df.columns:
             return df
         return df.filter(~F.col(TOMB_COL)).drop(TOMB_COL)
-
-    def _commit(self, df: DataFrame) -> None:
-        v = self._current_version()
-        new_dir = os.path.join(self.path, f"v{v + 1}")
-        df.write.mode("overwrite").parquet(new_dir)
-        write_pointer(self._current_file(), str(v + 1))
-        self._schema = (v + 1, df.schema)
-        old_dir = os.path.join(self.path, f"v{v}")
-        if v and os.path.isdir(old_dir):
-            shutil.rmtree(old_dir, ignore_errors=True)
 
     def merge_batch(self, ops: DataFrame) -> None:
         """Apply one micro-batch of envelope ops: stage it once, then
@@ -390,11 +434,17 @@ class StateTable:
             dropped_databases=self.dropped_databases,
             dropped_collections=self.dropped_collections,
         ) as (staged, drops, _):
-            stored = self.read(include_tombstones=True, session=ops.sparkSession)
-            merged = _erase_dropped(_merge_apply(stored, staged), drops)
-            if self.tombstone_retention is not None:
-                merged = _prune_old_tombstones(merged, staged, self.tombstone_retention)
-            self._commit(merged)
+            self._apply(staged, drops)
+
+    def _apply(self, staged: DataFrame, drops: list[tuple]) -> None:
+        """Commit one staged batch (:func:`staged_batch`'s frame, or one
+        derived from it with the same key columns): read the stored
+        rows, MERGE, erase the drops, sweep old tombstones, commit."""
+        stored = self.read(include_tombstones=True, session=staged.sparkSession)
+        merged = _erase_dropped(_merge_apply(stored, staged), drops)
+        if self.tombstone_retention is not None:
+            merged = _prune_old_tombstones(merged, staged, self.tombstone_retention)
+        self._commit(merged)
 
     def prune_tombstones(self, before_version: int) -> None:
         """Drop persisted tombstones older than ``before_version`` —

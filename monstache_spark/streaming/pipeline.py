@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from monstache_spark.envelope import events_to_envelope, id_guard
 from monstache_spark.operators import filters as Flt
 from monstache_spark.sinks.merge import StateTable
+from monstache_spark.streaming.ops import BackoffPolicy
 
 
 @dataclass
@@ -143,20 +144,13 @@ def run_stream(
     ops = transform(_as_envelope(normalize_nanos(stream)), cfg)
     state = _make_state(spark, cfg)
 
-    if cfg.sink_max_retries or cfg.fail_fast:
-        from monstache_spark.streaming.ops import BackoffPolicy
+    # max_retries=0 without fail_fast runs the merge exactly once
+    policy = BackoffPolicy(
+        base_seconds=1.0, max_retries=cfg.sink_max_retries, fail_fast=cfg.fail_fast
+    )
 
-        policy = BackoffPolicy(
-            base_seconds=1.0, max_retries=cfg.sink_max_retries, fail_fast=cfg.fail_fast
-        )
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            policy.run(lambda: state.merge_batch(batch_df))
-
-    else:
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            state.merge_batch(batch_df)
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        policy.run(lambda: state.merge_batch(batch_df))
 
     q = (
         ops.writeStream.foreachBatch(sink)

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from monstache_spark.config import load_config, to_engine_plan
 
 SAMPLE = """
@@ -361,3 +363,16 @@ def test_relate_mapping_subkey_spellings_match_reference():
     im = _re.search(r"type indexMapping struct \{(.*?)\}", src, _re.S).group(1)
     assert _re.search(r"^\tNamespace\s", im, _re.M)
     assert _re.search(r"^\tIndex\s", im, _re.M)
+
+
+@pytest.mark.parametrize("value", ["abc", "0", "-3", "2.5"])
+def test_state_partitions_env_names_the_knob(spark, monkeypatch, value):
+    """A ``SPARK_GRAFT_STATE_PARTITIONS`` that is not a positive integer
+    fails with a message naming the variable; a valid one is used as is."""
+    from monstache_spark.session import stateful_shuffle_width
+
+    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", value)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STATE_PARTITIONS"):
+        stateful_shuffle_width(spark)
+    monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", "12")
+    assert stateful_shuffle_width(spark) == 12

@@ -1,6 +1,8 @@
-"""The state sink's commit and staging contracts: crash-safe pointer
-swaps, the K6 drop toggles, envelope sources reaching the drop erase,
-and a load-insensitive budget (Spark jobs, Py4J round trips) for a warm
+"""The state sink's merge, commit and staging contracts: the version
+guard and its tie rules, drop erase and tombstone pruning, crash-safe
+pointer swaps (with the downsample sink's exactly-once epoch replay),
+the K6 drop toggles, envelope sources reaching the drop erase, and a
+load-insensitive budget (Spark jobs, Py4J round trips) for a warm
 micro-batch merge."""
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ import pytest
 
 from monstache_spark.sinks import merge
 from monstache_spark.sinks.bucketed import BucketedStateTable
+from monstache_spark.sinks.downsample import DownsampleTable
 from monstache_spark.sinks.merge import StateTable
 
 ENV_SCHEMA = (
@@ -35,15 +38,86 @@ def _keys(table):
     return set() if df is None else {(r["ns"], r["id"], r["version"]) for r in df.collect()}
 
 
+def _table(spark, path, kind):
+    return StateTable(spark, path) if kind == "plain" else BucketedStateTable(spark, path, 4)
+
+
 @pytest.mark.parametrize("kind", ["plain", "bucketed"])
+def test_version_guard_and_tie_rules(spark, tmp_path, kind):
+    """The documented tie convention, batch by batch: newer version
+    wins; delete beats upsert at the SAME version within a batch AND
+    across batches; stale replays lose to persisted tombstones."""
+    st = _table(spark, str(tmp_path / kind), kind)
+    st.merge_batch(_ops(spark, [("i", "db.c", "a", 10), ("i", "db.c", "b", 10)]))
+    # same-version delete+insert in ONE batch: stays dead
+    st.merge_batch(_ops(spark, [("d", "db.c", "a", 20), ("i", "db.c", "a", 20)]))
+    assert _keys(st) == {("db.c", "b", 10)}
+    # cross-batch: a stale insert at the tombstone's version stays dead
+    st.merge_batch(_ops(spark, [("i", "db.c", "a", 20)]))
+    assert _keys(st) == {("db.c", "b", 10)}
+    # strictly newer insert resurrects
+    st.merge_batch(_ops(spark, [("i", "db.c", "a", 21)]))
+    assert _keys(st) == {("db.c", "b", 10), ("db.c", "a", 21)}
+    # upsert tie across batches: the batch row wins (non-tombstone)
+    st.merge_batch(_ops(spark, [("u", "db.c", "b", 10)]))
+    assert _keys(st) == {("db.c", "b", 10), ("db.c", "a", 21)}
+
+
+@pytest.mark.parametrize("kind", ["plain", "bucketed"])
+def test_drop_erase_and_tombstone_prune(spark, tmp_path, kind):
+    st = _table(spark, str(tmp_path / kind), kind)
+    st.merge_batch(
+        _ops(
+            spark,
+            [("i", "db.c", "a", 10), ("i", "db.c", "b", 11), ("i", "db2.c", "z", 12)],
+        )
+    )
+    # drop at v=15 erases db.c rows <= 15; post-drop re-create survives
+    st.merge_batch(_ops(spark, [("drop", "db.c", None, 15), ("i", "db.c", "n", 16)]))
+    assert {(ns, i) for ns, i, _ in _keys(st)} == {("db.c", "n"), ("db2.c", "z")}
+    # dropDatabase erases every namespace of the db
+    st.merge_batch(_ops(spark, [("dropDatabase", "db2", None, 20)]))
+    assert {(ns, i) for ns, i, _ in _keys(st)} == {("db.c", "n")}
+    # tombstone prune removes old tombstones only
+    st.merge_batch(_ops(spark, [("d", "db.c", "n", 30)]))
+    st.prune_tombstones(before_version=31)
+    stored = st.read(include_tombstones=True)  # None: the bucketed table has no bucket left
+    assert stored is None or stored.filter("id = 'n'").count() == 0
+
+
+def _points(spark, ids):
+    """Downsample points: one host, hourly buckets over three hours."""
+    return spark.createDataFrame(
+        [(i, dt.datetime(2024, 1, 1, i % 3, i), "h1", float(i)) for i in ids],
+        "event_id long, ts timestamp, host string, cpu double",
+    )
+
+
+def _folded(table):
+    """Points the downsample sink has folded: (doc_count, cpu_count) totals."""
+    rows = table.read().collect()
+    return sum(r["doc_count"] for r in rows), sum(r["cpu_count"] for r in rows)
+
+
+@pytest.mark.parametrize("kind", ["plain", "bucketed", "downsample"])
 def test_failed_pointer_swap_keeps_previous_version(spark, tmp_path, monkeypatch, kind):
     """A commit whose CURRENT swap fails leaves the table reading the
-    version before it; replaying the batch then converges."""
+    version before it; replaying the batch then converges. The
+    downsample sink's folds are additive, so its replayed epoch must
+    fold exactly once: the failed commit's epoch marker never becomes
+    current, and a second replay is skipped."""
     path = str(tmp_path / kind)
-    table = StateTable(spark, path) if kind == "plain" else BucketedStateTable(spark, path, 4)
-    table.merge_batch(_ops(spark, [("i", "db.c", "a", 10), ("i", "db.c", "b", 10)]))
-    before = _keys(table)
-    second = _ops(spark, [("u", "db.c", "a", 20), ("d", "db.c", "b", 20)])
+    if kind == "downsample":
+        table = DownsampleTable(spark, path, "ts", ["host"], ["cpu"])
+        table.merge_batch(_points(spark, range(6)), batch_id=0)
+        second, epoch, contents = _points(spark, range(6, 10)), {"batch_id": 1}, _folded
+    else:
+        table = _table(spark, path, kind)
+        table.merge_batch(_ops(spark, [("i", "db.c", "a", 10), ("i", "db.c", "b", 10)]))
+        second, epoch, contents = (
+            _ops(spark, [("u", "db.c", "a", 20), ("d", "db.c", "b", 20)]), {}, _keys
+        )
+    before = contents(table)
 
     real_replace = os.replace
 
@@ -54,14 +128,23 @@ def test_failed_pointer_swap_keeps_previous_version(spark, tmp_path, monkeypatch
 
     monkeypatch.setattr(merge.os, "replace", failing_replace)
     with pytest.raises(OSError, match="simulated crash"):
-        table.merge_batch(second)
+        table.merge_batch(second, **epoch)
     monkeypatch.setattr(merge.os, "replace", real_replace)
 
     with open(os.path.join(path, "CURRENT")) as f:
         assert f.read() == "1"
-    assert _keys(table) == before
-    table.merge_batch(second)
-    assert _keys(table) == {("db.c", "a", 20)}
+    assert contents(table) == before
+    if kind == "downsample":
+        assert table._last_applied() == 0  # the marker of the version before
+    table.merge_batch(second, **epoch)
+    if kind == "downsample":
+        assert before == (6, 6)
+        assert table._last_applied() == 1
+        assert contents(table) == (10, 10)
+        table.merge_batch(second, **epoch)  # epoch 1 is marked current now: skipped
+        assert contents(table) == (10, 10)
+    else:
+        assert contents(table) == {("db.c", "a", 20)}
 
 
 @pytest.mark.parametrize(

@@ -29,7 +29,8 @@ import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 import duckdb
 
@@ -37,7 +38,6 @@ import __spark_entry__ as entrymod
 from monstache_spark.session import get_spark
 from monstache_spark.sources.testdata import TABLES
 
-_REPO = "/root/repo"
 _CACHE_PATH = os.path.join(_REPO, ".oracle_cache.json")
 _MOD_RE = re.compile(r"monstache_spark(?:\.[A-Za-z_][\w]*)+")
 

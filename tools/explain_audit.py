@@ -9,10 +9,11 @@ Prints PASS/FAIL per assertion and each audited plan on failure.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from monstache_spark.session import get_spark

@@ -14,10 +14,11 @@ asserts it while timing.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from monstache_spark.session import get_spark
 from monstache_spark.sources.testdata import load_table
