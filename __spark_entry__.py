@@ -1896,13 +1896,11 @@ def _q_ann_index_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-batch stages are dominated by empty-task scheduling — the
     # hash contract is width-independent; $SPARK_GRAFT_STATE_PARTITIONS
     # sizes it for production batch volumes
-    from monstache_spark.session import stateful_shuffle_width
+    from monstache_spark.session import session_conf, stateful_shuffle_width
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stateful_shuffle_width(spark))
-    )
-    try:
+    with session_conf(
+        spark, **{"spark.sql.shuffle.partitions": stateful_shuffle_width(spark)}
+    ):
         table = IvfPqIndexTable(spark, os.path.join(base, "index"), dim=64)
         table.bootstrap(emb)
 
@@ -1942,8 +1940,6 @@ def _q_ann_index_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return table.read().select(
         F.col("id").cast("long").alias("vec_id"), "version", "cell", "codes"
     )
@@ -5225,13 +5221,11 @@ def _q_stream_eql_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The alert set is per-key deterministic — width-independent;
     # $SPARK_GRAFT_STATE_PARTITIONS sizes it for production key
     # cardinalities (session.stateful_shuffle_width).
-    from monstache_spark.session import stateful_shuffle_width
+    from monstache_spark.session import session_conf, stateful_shuffle_width
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stateful_shuffle_width(spark))
-    )
-    try:
+    with session_conf(
+        spark, **{"spark.sql.shuffle.partitions": stateful_shuffle_width(spark)}
+    ):
         q = (
             alerts.writeStream.format("parquet")
             .option("path", sink)
@@ -5240,8 +5234,6 @@ def _q_stream_eql_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     out = spark.read.parquet(sink)
     return out.select(
         F.col("k").cast("long").alias("user_id"),

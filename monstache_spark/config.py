@@ -58,7 +58,6 @@ _ENGINE_KEYS = {
     # engine-specific extensions
     "checkpoint-dir",
     "state-dir",
-    "state-buckets",
 }
 
 
@@ -122,7 +121,6 @@ def load_config(path: str) -> EngineConfig:
         dropped_collections=bool(raw.get("dropped-collections", True)),
         checkpoint_dir=raw.get("checkpoint-dir", "/tmp/monstache_spark/checkpoint"),
         state_dir=raw.get("state-dir", "/tmp/monstache_spark/state"),
-        state_buckets=int(raw.get("state-buckets", 0)),
         index_overrides={
             m["namespace"]: m["index"]
             for m in raw.get("mapping", [])

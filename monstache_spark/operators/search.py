@@ -2045,7 +2045,8 @@ def bm25_topk(
 ) -> DataFrame:
     """Top-``k`` documents by BM25 for a bag of query terms.
 
-    ``token_counts`` (analyzer paths only) takes a PRE-TOKENIZED
+    ``token_counts`` (analyzer paths only; passing it without an
+    ``analyzer`` raises ``ValueError``) takes a PRE-TOKENIZED
     ``(id, term, cnt)`` frame — one row per distinct (document, term)
     of exactly the documents to score — in place of tokenizing
     ``docs``; callers that already tokenized the corpus for their own
@@ -2074,6 +2075,10 @@ def bm25_topk(
     """
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
+    if token_counts is not None and analyzer is None:
+        raise ValueError(
+            "token_counts holds analyzed terms and needs an analyzer; got analyzer=None"
+        )
     scored = _bm25_scored(
         docs, query_terms, k1, b, text_col, id_col, analyzer, analyze_query,
         token_counts,

@@ -9,6 +9,8 @@ pandas-UDF paths).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -37,6 +39,27 @@ def state_store_provider(state_store: str | None = None) -> str | None:
     if "." in choice:
         return state_store or os.environ["SPARK_GRAFT_STATE_STORE"]
     raise ValueError(f"unknown state store backend: {choice!r}")
+
+
+@contextmanager
+def session_conf(spark: SparkSession, **confs: object) -> Iterator[None]:
+    """Pin session confs (each value as ``str(value)``) for the duration
+    of the block — conf keys contain dots, so pass them as
+    ``**{"spark.sql.shuffle.partitions": 8}``; a ``None`` value leaves
+    that conf alone. On exit, whether the block returns or raises, each
+    pinned conf is set back to its old value, or unset if it had none."""
+    pinned = {k: str(v) for k, v in confs.items() if v is not None}
+    prev = {k: spark.conf.get(k, None) for k in pinned}
+    try:
+        for k, v in pinned.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def shuffle_partitions(spark: SparkSession) -> int:

@@ -323,7 +323,7 @@ class IvfPqIndexTable:
         (``StateTable._apply``): the cross-batch rules of
         :func:`sinks.merge._merge_apply`, the drop erase, and the one
         versioned commit (:class:`sinks.merge.VersionedTable`)."""
-        with staged_batch(ops, (self.vec_col,), prefix="") as (staged, drops, _):
+        with staged_batch(ops, (self.vec_col,), prefix="") as (staged, drops):
             enriched = (
                 self.encode(staged, id_col="id")
                 .withColumn("cell", F.when(~F.col(TOMB_COL), F.col("cell")))

@@ -57,13 +57,12 @@ at-least-once replay safe (monstache.go:4077-4080). Bound their growth
 with ``tombstone_retention`` (version units) or an explicit
 ``prune_tombstones()``.
 
-Pointer files (``CURRENT``, the bucketed sink's manifests, the
-``_BATCH_ID`` epoch marker) are written to a temp file and swapped in
-with ``os.replace``, so a process that dies during a commit leaves the
-previous version readable. That is not durability against an OS or
-power failure: the pointer is fsynced, but Spark's parquet writer does
-not fsync the data files it points to, and the previous version's
-directory is removed right after the swap.
+Pointer files (``CURRENT``, the ``_BATCH_ID`` epoch marker) are
+written to a temp file and swapped in with ``os.replace``, so a process
+that dies during a commit leaves the previous version readable. That is
+not durability against an OS or power failure: the pointer is fsynced,
+but Spark's parquet writer does not fsync the data files it points to,
+and the previous version's directory is removed right after the swap.
 """
 
 from __future__ import annotations
@@ -73,7 +72,7 @@ import shutil
 from contextlib import contextmanager
 from typing import Iterator
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from monstache_spark.envelope import OP_DROP, OP_DROP_DB
@@ -173,38 +172,22 @@ def staged_batch(
     prefix: str = "last_",
     dropped_databases: bool = True,
     dropped_collections: bool = True,
-    bucket: Column | None = None,
-) -> Iterator[tuple[DataFrame, list[tuple], set[int]]]:
+) -> Iterator[tuple[DataFrame, list[tuple]]]:
     """Stage ``ops`` once (:func:`_stage_batch`), persist the staged
-    frame for the duration of the block, and read its control rows with
+    frame for the duration of the block, and read its drop rows with
     ONE collect that also fills the cache.
 
-    Yields ``(staged, drops, buckets)``: ``drops`` is the honoured
-    ``(op, ns, max version)`` list (a drop kind switched off is left
-    out), ``buckets`` the distinct values of the ``bucket`` expression
-    over the data keys (empty unless ``bucket`` is given — the bucketed
-    sink's touched buckets)."""
+    Yields ``(staged, drops)``: ``drops`` is the honoured ``(op, ns,
+    max version)`` list (a drop kind switched off is left out)."""
     staged = _stage_batch(ops, payload_cols, prefix).persist()
     try:
-        if bucket is None:
-            control = staged.where(f"{KIND_COL} != 0")
-        else:
-            data = F.col(KIND_COL) == 0
-            control = staged.select(
-                KIND_COL,
-                F.when(~data, F.col("ns")).alias("ns"),
-                F.when(~data, F.col("version")).alias("version"),
-                F.when(data, bucket).alias("_bucket"),
-            ).distinct()
-        rows = control.collect()
         honoured = {OP_DROP: dropped_collections, OP_DROP_DB: dropped_databases}
         drops = [
             (_DROP_KINDS[r[KIND_COL]], r["ns"], r["version"])
-            for r in rows
-            if r[KIND_COL] != 0 and honoured[_DROP_KINDS[r[KIND_COL]]]
+            for r in staged.where(f"{KIND_COL} != 0").collect()
+            if honoured[_DROP_KINDS[r[KIND_COL]]]
         ]
-        buckets = {r["_bucket"] for r in rows if r[KIND_COL] == 0}
-        yield staged, drops, buckets
+        yield staged, drops
     finally:
         staged.unpersist(blocking=False)
 
@@ -234,19 +217,16 @@ def _merge_apply(stored: DataFrame | None, staged: DataFrame) -> DataFrame:
     cols = ", ".join(_q(c) for c in staged.columns if c != KIND_COL)
     if stored is None:
         return _sql(f"SELECT {cols} FROM {{staged}} WHERE {KIND_COL} = 0", staged=staged)
-    # a table written before tombstone support has no _tomb column
-    tomb = "" if TOMB_COL in stored.columns else f", false AS {TOMB_COL}"
     return _sql(
-        f"WITH st AS (SELECT *{tomb} FROM {{stored}}), "
-        f"bk AS (SELECT ns AS _k_ns, id AS _k_id, version AS _v_new FROM {{staged}} "
+        f"WITH bk AS (SELECT ns AS _k_ns, id AS _k_id, version AS _v_new FROM {{staged}} "
         f"WHERE {KIND_COL} = 0) "
-        f"SELECT /*+ BROADCAST(bk) */ {cols} FROM st "
+        f"SELECT /*+ BROADCAST(bk) */ {cols} FROM {{stored}} "
         "LEFT JOIN bk ON ns = _k_ns AND id = _k_id "
         f"WHERE _v_new IS NULL OR version > _v_new OR (version = _v_new AND {TOMB_COL}) "
         "UNION ALL "
         f"SELECT /*+ BROADCAST(cur) */ {cols} FROM {{staged}} "
         "LEFT JOIN (SELECT /*+ BROADCAST(bk) */ ns AS _c_ns, id AS _c_id, "
-        f"version AS _v_cur, {TOMB_COL} AS _c_tomb FROM st "
+        f"version AS _v_cur, {TOMB_COL} AS _c_tomb FROM {{stored}} "
         "LEFT SEMI JOIN bk ON ns = _k_ns AND id = _k_id) cur "
         "ON ns = _c_ns AND id = _c_id "
         f"WHERE {KIND_COL} = 0 "
@@ -420,8 +400,7 @@ class StateTable(VersionedTable):
         """The committed state: live rows, or with tombstones. ``session``
         as in :meth:`VersionedTable._read_committed`."""
         df = self._read_committed(session)
-        # a table written before tombstone support has no _tomb column
-        if df is None or include_tombstones or TOMB_COL not in df.columns:
+        if df is None or include_tombstones:
             return df
         return df.filter(~F.col(TOMB_COL)).drop(TOMB_COL)
 
@@ -433,7 +412,7 @@ class StateTable(VersionedTable):
             self.payload_cols,
             dropped_databases=self.dropped_databases,
             dropped_collections=self.dropped_collections,
-        ) as (staged, drops, _):
+        ) as (staged, drops):
             self._apply(staged, drops)
 
     def _apply(self, staged: DataFrame, drops: list[tuple]) -> None:
@@ -451,8 +430,8 @@ class StateTable(VersionedTable):
         the explicit gc_deletes sweep (safe once no source can replay
         ops older than that version)."""
         cur = self.read(include_tombstones=True)
-        if cur is None or TOMB_COL not in cur.columns:
-            return  # empty, or written before tombstone support: nothing to prune
+        if cur is None:
+            return  # nothing committed yet: nothing to prune
         self._commit(
             cur.filter(~(F.col(TOMB_COL) & (F.col("version") < F.lit(before_version))))
         )

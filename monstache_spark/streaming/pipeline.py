@@ -40,7 +40,6 @@ class PipelineConfig:
     checkpoint_dir: str = "/tmp/monstache_spark/checkpoint"
     state_dir: str = "/tmp/monstache_spark/state"
     index_overrides: dict[str, str] = field(default_factory=dict)
-    state_buckets: int = 0  # >0: hash-bucketed state (touched-bucket merges)
     # §2.7 explicit resume: drop ops strictly older than this event time
     # (resume-from-timestamp, monstache.go:4679-4685). Checkpoint-based
     # resume needs no config — this is the manual override only.
@@ -96,18 +95,13 @@ def transform(ops: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return id_guard(out)
 
 
-def _make_state(spark: SparkSession, cfg: PipelineConfig):
-    drops = {
-        "dropped_databases": cfg.dropped_databases,
-        "dropped_collections": cfg.dropped_collections,
-    }
-    if cfg.state_buckets > 0:
-        from monstache_spark.sinks.bucketed import BucketedStateTable
-
-        return BucketedStateTable(
-            spark, cfg.state_dir, n_buckets=cfg.state_buckets, **drops
-        )
-    return StateTable(spark, cfg.state_dir, **drops)
+def _make_state(spark: SparkSession, cfg: PipelineConfig) -> StateTable:
+    return StateTable(
+        spark,
+        cfg.state_dir,
+        dropped_databases=cfg.dropped_databases,
+        dropped_collections=cfg.dropped_collections,
+    )
 
 
 def _as_envelope(source: DataFrame) -> DataFrame:

@@ -69,6 +69,7 @@ def run_stream_to_parquet(
     RocksDB provider for state that outgrows executor memory."""
     from monstache_spark.session import (
         _PROVIDER_CONF,
+        session_conf,
         state_store_provider,
         stateful_shuffle_width,
     )
@@ -82,28 +83,25 @@ def run_stream_to_parquet(
     # streaming state stores are allocated per shuffle partition and AQE
     # cannot coalesce stateful exchanges; derive the width (env-
     # overridable for production key cardinalities) instead of the
-    # session's full batch width
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    provider = state_store_provider(state_store)
-    prev_provider = spark.conf.get(_PROVIDER_CONF, None)
-    _NODATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_nodata = spark.conf.get(_NODATA_CONF, None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(stateful_shuffle_width(spark))
-    )
-    if provider:
-        spark.conf.set(_PROVIDER_CONF, provider)
-    if not no_data_batches:
-        # The zero-row finalize micro-batch exists to advance the
-        # watermark so APPEND-mode aggregations flush and state evicts.
-        # An operator whose OUTPUT never depends on watermark advance
-        # (inner stream-stream join: matches emit in the batch where
-        # both sides arrive; eviction is cleanup only) may skip it —
-        # measured 1.7-1.9 s of pure state-store iteration per drain.
-        # NEVER set this for windowed aggregations / dropDuplicates
-        # in append mode: their final windows would not emit.
-        spark.conf.set(_NODATA_CONF, "false")
-    try:
+    # session's full batch width.
+    # The zero-row finalize micro-batch exists to advance the watermark
+    # so APPEND-mode aggregations flush and state evicts. An operator
+    # whose OUTPUT never depends on watermark advance (inner stream-
+    # stream join: matches emit in the batch where both sides arrive;
+    # eviction is cleanup only) may skip it with no_data_batches=False —
+    # measured 1.7-1.9 s of pure state-store iteration per drain. NEVER
+    # skip it for windowed aggregations / dropDuplicates in append mode:
+    # their final windows would not emit.
+    with session_conf(
+        spark,
+        **{
+            "spark.sql.shuffle.partitions": stateful_shuffle_width(spark),
+            _PROVIDER_CONF: state_store_provider(state_store),
+            "spark.sql.streaming.noDataMicroBatches.enabled": (
+                None if no_data_batches else "false"
+            ),
+        },
+    ):
         writer = (
             df.writeStream.foreachBatch(sink)
             .outputMode(mode)
@@ -113,18 +111,6 @@ def run_stream_to_parquet(
             writer = writer.option("checkpointLocation", checkpoint_dir)
         q = writer.start()
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if provider:
-            if prev_provider is None:
-                spark.conf.unset(_PROVIDER_CONF)
-            else:
-                spark.conf.set(_PROVIDER_CONF, prev_provider)
-        if not no_data_batches:
-            if prev_nodata is None:
-                spark.conf.unset(_NODATA_CONF)
-            else:
-                spark.conf.set(_NODATA_CONF, prev_nodata)
     return spark.read.parquet(out_dir)
 
 

@@ -12,7 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from monstache_spark.session import ROCKSDB_PROVIDER
+from monstache_spark.session import ROCKSDB_PROVIDER, session_conf
 from monstache_spark.sinks.annindex import IvfPqIndexTable
 
 DIM = 8
@@ -221,10 +221,7 @@ def test_streaming_restart_matches_fresh_build(spark, tmp_path, backend):
             .parquet(str(src))
         )
         conf_key = "spark.sql.streaming.stateStore.providerClass"
-        old = spark.conf.get(conf_key, None)
-        if backend == "rocksdb":
-            spark.conf.set(conf_key, RP)
-        try:
+        with session_conf(spark, **{conf_key: RP if backend == "rocksdb" else None}):
             q = (
                 stream.writeStream.foreachBatch(
                     lambda df, _eid: t.merge_batch(df)
@@ -234,9 +231,6 @@ def test_streaming_restart_matches_fresh_build(spark, tmp_path, backend):
                 .start()
             )
             q.awaitTermination()
-        finally:
-            if old is not None:
-                spark.conf.set(conf_key, old)
         return t
 
     write_file(b1, "b1.parquet")

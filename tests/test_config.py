@@ -60,7 +60,7 @@ def test_load_config_maps_reference_keys(tmp_path, monkeypatch):
     assert p.namespace_regex == r"^test\..+"
     assert p.namespace_exclude_regex == r"\.skip$"
     assert p.index_overrides == {"test.users": "users_v2"}
-    assert p.state_buckets == 8
+    assert cfg.extras["state-buckets"] == 8  # retired key: surfaced, not interpreted
     assert p.checkpoint_dir == "/tmp/envtest/ckpt"  # ${VAR} expansion
     assert p.resume_from_ts == "2024-01-15 00:00:00"  # epoch-seconds form
     assert cfg.direct_read_namespaces == ["testdata.customer", "testdata.orders"]
@@ -99,7 +99,6 @@ namespace-regex = '^test\\..+'
 direct-read-namespaces = ["testdata.region"]
 checkpoint-dir = "{tmp_path}/ckpt"
 state-dir = "{tmp_path}/state"
-state-buckets = 4
 """
     )
     rc = main(["--config", str(cfg_file), "--sf-dir", "/root/testdata/sf0.001", "--show", "2"])
@@ -336,7 +335,7 @@ def test_toml_key_spellings_match_reference():
     untagged = {"mapping", "relate", "workers", "worker"}
     for f in untagged:  # the fields must still exist in the reference
         assert _re.search(rf"^\t{f.capitalize()}\s", src, _re.M), f
-    extensions = {"checkpoint-dir", "state-dir", "state-buckets"}
+    extensions = {"checkpoint-dir", "state-dir"}
     drifted = sorted(set(_ENGINE_KEYS) - tags - untagged - extensions)
     assert not drifted, (
         f"config keys not spelled as the reference accepts them: {drifted}"
@@ -376,3 +375,26 @@ def test_state_partitions_env_names_the_knob(spark, monkeypatch, value):
         stateful_shuffle_width(spark)
     monkeypatch.setenv("SPARK_GRAFT_STATE_PARTITIONS", "12")
     assert stateful_shuffle_width(spark) == 12
+
+
+def test_session_conf_restores_on_raise(spark):
+    """``session_conf`` puts every pinned conf back when its block
+    raises: a conf that was set gets its old value, one that was unset
+    is unset again (its default applies); a ``None`` value pins nothing."""
+    from monstache_spark.session import session_conf
+
+    parts = "spark.sql.shuffle.partitions"
+    nodata = "spark.sql.streaming.noDataMicroBatches.enabled"
+    provider = "spark.sql.streaming.stateStore.providerClass"
+    before = spark.conf.get(parts)
+    assert spark.conf.get(nodata, None) is None
+    assert spark.conf.get(provider, None) is None
+    with pytest.raises(RuntimeError, match="body failed"):
+        with session_conf(spark, **{parts: 3, nodata: "false", provider: None}):
+            assert spark.conf.get(parts) == "3"
+            assert spark.conf.get(nodata) == "false"
+            assert spark.conf.get(provider, None) is None
+            raise RuntimeError("body failed")
+    assert spark.conf.get(parts) == before
+    assert spark.conf.get(nodata, None) is None
+    assert spark.conf.get(nodata) == "true"

@@ -155,21 +155,6 @@ def test_drop_version_tie_is_erased(spark, state):
     assert _state_dict(state.read()) == {("test.test", "3"): 3.0}
 
 
-def test_prune_tombstones_pre_tombstone_table(spark, tmp_path):
-    """prune_tombstones on a table written before tombstone support
-    (no _tomb column) is a safe no-op, matching the bucketed sink."""
-    import os
-
-    t = StateTable(spark, str(tmp_path / "old"))
-    df = spark.createDataFrame([_op("i", "1", 1, 1.0)], SCHEMA)
-    df.write.parquet(os.path.join(t.path, "v1"))
-    with open(os.path.join(t.path, "CURRENT"), "w") as f:
-        f.write("1")
-    t.prune_tombstones(before_version=10**9)  # must not raise
-    assert _state_dict(t.read().selectExpr(
-        "ns", "id", "value AS last_value")) == {("test.test", "1"): 1.0}
-
-
 def test_tombstone_retention_prunes(spark, tmp_path):
     state = StateTable(spark, str(tmp_path / "ret"), tombstone_retention=10)
     _merge(spark, state, [_op("i", "1", 1, 1.0), _op("d", "1", 3)])

@@ -1,10 +1,9 @@
-"""Property test of the state tables' stored rows (SURVEY.md §2.6 K1-K6).
+"""Property test of the state table's stored rows (SURVEY.md §2.6 K1-K6).
 
 Random op sets — with same-version delete+insert pairs, at-least-once
 replays and null-id drops — cut into random micro-batches must leave
-``StateTable`` and ``BucketedStateTable`` holding exactly the rows
-(live rows AND tombstones) that a pure-Python model of the tie rules
-computes for the same batches:
+``StateTable`` holding exactly the rows (live rows AND tombstones) that
+a pure-Python model of the tie rules computes for the same batches:
 
 - within a batch a key stages as a tombstone iff its max delete version
   is >= its max upsert version, else as its max-version upsert;
@@ -21,7 +20,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from monstache_spark.sinks.bucketed import BucketedStateTable
 from monstache_spark.sinks.merge import StateTable
 
 NAMESPACES = ("db.a", "db.b", "other.c")
@@ -127,12 +125,7 @@ class TestStateTablesMatchModel:
     @given(batches=_batches())
     def test_stored_rows_match_model(self, spark, tmp_path_factory, batches):
         base = tmp_path_factory.mktemp("prop")
-        plain = StateTable(spark, str(base / "plain"))
-        bucketed = BucketedStateTable(spark, str(base / "bucketed"), n_buckets=4)
+        table = StateTable(spark, str(base / "plain"))
         for batch in batches:
-            df = _ops_df(spark, batch)
-            plain.merge_batch(df)
-            bucketed.merge_batch(df)
-        expect = _model(batches)
-        assert _stored(plain) == expect
-        assert _stored(bucketed) == expect
+            table.merge_batch(_ops_df(spark, batch))
+        assert _stored(table) == _model(batches)

@@ -158,6 +158,17 @@ def test_bm25_topk_plan_is_take_ordered(spark):
     assert "SortAggregate" not in plan
 
 
+def test_bm25_topk_token_counts_needs_analyzer(spark):
+    """A pre-tokenized frame holds ANALYZED terms; without an analyzer
+    bm25_topk would tokenize ``docs`` itself and silently ignore it."""
+    import pytest
+
+    df = _docs(spark)
+    tc = df.select("doc_id", F.lit("spark").alias("term"), F.lit(1).alias("cnt"))
+    with pytest.raises(ValueError, match="token_counts.*analyzer"):
+        bm25_topk(df, ["spark"], k=2, token_counts=tc)
+
+
 def test_more_like_this_excludes_source_and_is_deterministic(spark):
     df = _docs(spark)
     a = [(r["doc_id"], r["score"]) for r in more_like_this(df, 0, k=3, min_term_len=4).collect()]

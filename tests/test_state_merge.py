@@ -15,7 +15,6 @@ import pstats
 import pytest
 
 from monstache_spark.sinks import merge
-from monstache_spark.sinks.bucketed import BucketedStateTable
 from monstache_spark.sinks.downsample import DownsampleTable
 from monstache_spark.sinks.merge import StateTable
 
@@ -38,16 +37,11 @@ def _keys(table):
     return set() if df is None else {(r["ns"], r["id"], r["version"]) for r in df.collect()}
 
 
-def _table(spark, path, kind):
-    return StateTable(spark, path) if kind == "plain" else BucketedStateTable(spark, path, 4)
-
-
-@pytest.mark.parametrize("kind", ["plain", "bucketed"])
-def test_version_guard_and_tie_rules(spark, tmp_path, kind):
+def test_version_guard_and_tie_rules(spark, tmp_path):
     """The documented tie convention, batch by batch: newer version
     wins; delete beats upsert at the SAME version within a batch AND
     across batches; stale replays lose to persisted tombstones."""
-    st = _table(spark, str(tmp_path / kind), kind)
+    st = StateTable(spark, str(tmp_path / "plain"))
     st.merge_batch(_ops(spark, [("i", "db.c", "a", 10), ("i", "db.c", "b", 10)]))
     # same-version delete+insert in ONE batch: stays dead
     st.merge_batch(_ops(spark, [("d", "db.c", "a", 20), ("i", "db.c", "a", 20)]))
@@ -63,9 +57,8 @@ def test_version_guard_and_tie_rules(spark, tmp_path, kind):
     assert _keys(st) == {("db.c", "b", 10), ("db.c", "a", 21)}
 
 
-@pytest.mark.parametrize("kind", ["plain", "bucketed"])
-def test_drop_erase_and_tombstone_prune(spark, tmp_path, kind):
-    st = _table(spark, str(tmp_path / kind), kind)
+def test_drop_erase_and_tombstone_prune(spark, tmp_path):
+    st = StateTable(spark, str(tmp_path / "plain"))
     st.merge_batch(
         _ops(
             spark,
@@ -81,8 +74,7 @@ def test_drop_erase_and_tombstone_prune(spark, tmp_path, kind):
     # tombstone prune removes old tombstones only
     st.merge_batch(_ops(spark, [("d", "db.c", "n", 30)]))
     st.prune_tombstones(before_version=31)
-    stored = st.read(include_tombstones=True)  # None: the bucketed table has no bucket left
-    assert stored is None or stored.filter("id = 'n'").count() == 0
+    assert st.read(include_tombstones=True).filter("id = 'n'").count() == 0
 
 
 def _points(spark, ids):
@@ -99,7 +91,7 @@ def _folded(table):
     return sum(r["doc_count"] for r in rows), sum(r["cpu_count"] for r in rows)
 
 
-@pytest.mark.parametrize("kind", ["plain", "bucketed", "downsample"])
+@pytest.mark.parametrize("kind", ["plain", "downsample"])
 def test_failed_pointer_swap_keeps_previous_version(spark, tmp_path, monkeypatch, kind):
     """A commit whose CURRENT swap fails leaves the table reading the
     version before it; replaying the batch then converges. The
@@ -112,7 +104,7 @@ def test_failed_pointer_swap_keeps_previous_version(spark, tmp_path, monkeypatch
         table.merge_batch(_points(spark, range(6)), batch_id=0)
         second, epoch, contents = _points(spark, range(6, 10)), {"batch_id": 1}, _folded
     else:
-        table = _table(spark, path, kind)
+        table = StateTable(spark, path)
         table.merge_batch(_ops(spark, [("i", "db.c", "a", 10), ("i", "db.c", "b", 10)]))
         second, epoch, contents = (
             _ops(spark, [("u", "db.c", "a", 20), ("d", "db.c", "b", 20)]), {}, _keys

@@ -153,8 +153,8 @@ def test_http_observability_endpoints(spark, tmp_path):
 
 def test_multi_microbatch_stream_equals_batch(spark, tmp_path):
     """maxFilesPerTrigger=1 over 3 source files: real multi-micro-batch
-    execution with cross-batch tombstones through the bucketed state
-    table must equal the single-shot batch materialization."""
+    execution with cross-batch tombstones through the state table
+    must equal the single-shot batch materialization."""
     from pyspark.sql import functions as F
 
     src = tmp_path / "mb_src"
@@ -168,7 +168,6 @@ def test_multi_microbatch_stream_equals_batch(spark, tmp_path):
         os.rename(os.path.join(scratch, f), str(src / f"{name}.parquet"))
     cfg = _cfg(tmp_path, "mb")
     cfg.max_files_per_trigger = 1
-    cfg.state_buckets = 4
     s = run_stream(spark, os.path.join(str(src), "*.parquet"), cfg)
     batch = run_batch(spark, all_events, _cfg(tmp_path, "mbb"))
     assert _as_dict(s.read()) == _as_dict(batch.read())
